@@ -19,7 +19,8 @@ object OracleSql {
     if (s.contains("E") || s.contains("e")) s.toLowerCase.replace("e", "e") else s
   }
 
-  /** FIR over a window named `w`, chunked exactly like Smoothing.sgDot:
+  /** FIR over a window named `w`, chunked exactly like
+    * SignalKernel.dotChunked:
     * (0.0 + c₀·lag(v,k) + … ≤100 terms) + (0.0 + …) + … — same chunk
     * boundaries, same left-assoc order, bitwise-identical to the Spark
     * plan. (Also keeps each chain under DuckDB's 128-deep binder limit.)
@@ -34,7 +35,7 @@ object OracleSql {
         else s"lead($valueCol, $off) OVER $win"
       s"(${dlit(c)}) * $tap"
     }
-    terms.grouped(graft.operators.Smoothing.dotChunk)
+    terms.grouped(graft.functions.SignalKernel.dotChunk)
       .map(g => "(0.0 + " + g.mkString(" + ") + ")")
       .mkString(" + ")
   }

@@ -438,70 +438,3 @@ object SqDistExpr {
     acc
   }
 }
-
-/** Chunk-associative FIR dot product for the Savitzky-Golay path:
-  * coefficient taps folded in chunks of `chunk` (each from 0.0,
-  * left-assoc), chunk sums added left-assoc — bit-for-bit the
-  * association order of Smoothing.sgDot's zip_with/aggregate chain
-  * AND the generated DuckDB oracle SQL (whose expression binder caps
-  * nesting at 128, hence the chunking). Native loop instead of ~51-301
-  * interpreted lambda evaluations per row. Returns null unless the
-  * taps array has exactly coeffs.length elements (the size guard the
-  * compositional form expressed with `when(size(...) === w, ...)`).
-  */
-case class FirDotExpr(child: Expression, coeffs: Array[Double], chunk: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_fir_dot"
-
-  protected override def nullSafeEval(input: Any): Any =
-    FirDotExpr.dotChunked(input.asInstanceOf[ArrayData], coeffs, chunk)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val ref = ctx.addReferenceObj("firCoeffs", coeffs, "double[]")
-    val eval = child.genCode(ctx)
-    val r = ctx.freshName("firRes")
-    ev.copy(code = code"""
-        ${eval.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = 0.0;
-        if (!${eval.isNull}) {
-          java.lang.Double $r = graft.functions.FirDotExpr.dotChunkedBoxed(${eval.value}, $ref, $chunk);
-          if ($r != null) { ${ev.isNull} = false; ${ev.value} = $r.doubleValue(); }
-        }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): FirDotExpr =
-    copy(child = newChild)
-}
-
-object FirDotExpr {
-  /** Null unless taps.length == coeffs.length; else the chunked fold. */
-  def dotChunkedBoxed(taps: ArrayData, coeffs: Array[Double], chunk: Int): java.lang.Double = {
-    if (taps.numElements() != coeffs.length) return null
-    java.lang.Double.valueOf(dotChunked(taps, coeffs, chunk))
-  }
-
-  def dotChunked(taps: ArrayData, coeffs: Array[Double], chunk: Int): Double =
-    dotChunked(taps.toDoubleArray(), coeffs, chunk)
-
-  /** Plain-array form, shared with the streaming envelope operator. */
-  def dotChunked(xs: Array[Double], coeffs: Array[Double], chunk: Int): Double = {
-    var total = 0.0
-    var first = true
-    var i = 0
-    while (i < coeffs.length) {
-      val end = math.min(i + chunk, coeffs.length)
-      var acc = 0.0
-      var j = i
-      while (j < end) { acc += xs(j) * coeffs(j); j += 1 }
-      total = if (first) acc else total + acc
-      first = false
-      i = end
-    }
-    total
-  }
-}

@@ -1,94 +1,61 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.PeakConfig
-import graft.functions.SavitzkyGolay
-import Smoothing.{keyCols, sgDot, blockRepeatPad, nearestExtend}
+import graft.functions.{SavitzkyGolay, SignalKernel}
 
 /** O4/O5/O6 — floor/ceiling envelopes + diastolic reference
-  * (`/root/reference/peak_detection.py:56-169,200-218`, SURVEY §2.3/§2.4).
+  * (the reference's `peak_detection.py:56-169,200-218`, SURVEY
+  * §2.3/§2.4).
   *
-  * Exact recipe per channel (defaults W=350, SG 301/3):
+  * Recipe per channel (defaults W=350, SG 301/3), computed by
+  * [[graft.functions.SignalKernel.envelopes]], which also states the
+  * null/NaN parity rules:
   *   floor[i]   = min over *interior local minima* of frame y[i, i+350),
   *                i ∈ [0, n−350); NaN when the frame has none
   *   padded     = blockRepeat(floor, 175)            — length n again
   *   baseline   = SG(301,3, mode='nearest')(padded)  — NOT stripped
   * ceiling mirrors with interior local maxima / max.
   *
-  * Null/NaN parity: a frame with no interior extremum poisons every SG
-  * output within 150 samples (SURVEY §2.3). We mark missing extrema as
-  * NaN *before* the convolution (Spark's `collect_list` drops nulls, NaN
-  * flows through arithmetic like numpy), and convert NaN→null at the
-  * operator boundary.
-  *
-  * Extremum marking uses the strict-neighbor rule (`v < lag ∧ v < lead`).
-  * scipy additionally reports flat-plateau extrema; a plateau inside a
-  * frame requires exactly-tied doubles, which the declared query surface
-  * (continuous signals) cannot produce — the exact plateau rule lives in
-  * the `FindPeaks` port (O7) where it is part of the contract.
-  *
   * Channels shorter than auxWindowSize + pad get null envelopes (the
   * reference crashes on them — divergence logged in SURVEY §8 Q2).
   */
 object Envelopes {
 
-  private def keys: Seq[Column] = keyCols.map(col)
+  /** Output row: a smoothed sample with its envelopes. */
+  final case class EnrichedRow(
+      experiment_id: String,
+      channel: Int,
+      sample_idx: Long,
+      t: Double,
+      y: Double,
+      y_smooth: Option[Double],
+      baseline: Option[Double],
+      ceiling: Option[Double],
+      diastolic: Option[Double]
+  )
 
-  /** Adds `baseline`, `ceiling`, `diastolic` columns to a frame that
-    * already has the target series (default `y_smooth`).
+  /** Adds `baseline`, `ceiling`, `diastolic` columns to a frame of
+    * [[Smoothing.SmoothedRow]]s: one pass per channel, like
+    * `PeakDetect.detectPeaks`.
     */
-  def withEnvelopes(
-      df: DataFrame,
-      cfg: PeakConfig = PeakConfig(),
-      targetCol: String = "y_smooth"
-  ): DataFrame = {
-    val bigW = cfg.auxWindowSize // 350
-    val sw = cfg.auxSmoothingWindow // 301
-    val pad = math.max(bigW, sw) / 2 // 175
-    val k = sw / 2 // 150
-    val c = SavitzkyGolay.coeffs(sw, cfg.auxPolyorder)
-
-    val wch = Window.partitionBy(keys: _*)
-    val wo = Window.partitionBy(keys: _*).orderBy("sample_idx")
-    val wfr = wo.rowsBetween(1, bigW - 2) // frame interior [i+1, i+348]
-    val v = col(targetCol)
-
-    val floorRaw = df
-      .withColumn("_n", count(lit(1)).over(wch))
-      .withColumn("_valley",
-        when(v < lag(v, 1).over(wo) && v < lead(v, 1).over(wo), v))
-      .withColumn("_peakv",
-        when(v > lag(v, 1).over(wo) && v > lead(v, 1).over(wo), v))
-      .withColumn("_fv", coalesce(min(col("_valley")).over(wfr), lit(Double.NaN)))
-      .withColumn("_cv", coalesce(max(col("_peakv")).over(wfr), lit(Double.NaN)))
-      .withColumn("_m", col("_n") - bigW)
-      .filter(col("sample_idx") < col("_m") && col("_m") >= pad)
-      .select(keys :+ col("sample_idx").as("_fi") :+ col("_fv") :+
-        col("_cv") :+ col("_m"): _*)
-
-    // blockRepeat pad to length _plen = _m + 2·pad (= n for defaults),
-    // then edge-replicate ±k rows so the 301-tap window never truncates
-    // (scipy mode='nearest').
-    val padded = blockRepeatPad(floorRaw, "_fi", "_m", pad)
-      .withColumn("_plen", col("_m") + 2 * pad)
-    val ext = nearestExtend(padded, "_plen", k)
-
-    val wtap = Window.partitionBy(keys: _*).orderBy("_pos").rowsBetween(-k, k)
-    val env = ext
-      .withColumn("_tf", collect_list(col("_fv")).over(wtap))
-      .withColumn("_tc", collect_list(col("_cv")).over(wtap))
-      .filter(col("_pos") >= 0 && col("_pos") < col("_plen"))
-      .withColumn("_b", when(size(col("_tf")) === sw, sgDot(col("_tf"), c)))
-      .withColumn("_c", when(size(col("_tc")) === sw, sgDot(col("_tc"), c)))
-      .select(keys :+ col("_pos").as("sample_idx") :+
-        when(!isnan(col("_b")), col("_b")).as("baseline") :+
-        when(!isnan(col("_c")), col("_c")).as("ceiling"): _*)
-
-    df.join(env, keyCols :+ "sample_idx", "left")
-      .withColumn("diastolic",
-        col("baseline") +
-          lit(cfg.relativeToBaseline) * (col("ceiling") - col("baseline")))
+  def withEnvelopes(df: DataFrame, cfg: PeakConfig = PeakConfig()): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val c = SavitzkyGolay.coeffs(cfg.auxSmoothingWindow, cfg.auxPolyorder)
+    df.as[Smoothing.SmoothedRow]
+      .groupByKey(r => (r.experiment_id, r.channel))
+      .flatMapGroups { (_: (String, Int), it: Iterator[Smoothing.SmoothedRow]) =>
+        val rows = it.toArray.sortBy(_.sample_idx)
+        val env = SignalKernel.envelopes(
+          rows.map(_.y_smooth.getOrElse(Double.NaN)), cfg.auxWindowSize, c)
+        rows.iterator.zipWithIndex.map { case (r, i) =>
+          val (b, cv) = (env.baseline(i), env.ceiling(i))
+          EnrichedRow(r.experiment_id, r.channel, r.sample_idx, r.t, r.y,
+            r.y_smooth, SignalKernel.nanToNone(b), SignalKernel.nanToNone(cv),
+            SignalKernel.diastolic(b, cv, cfg.relativeToBaseline))
+        }
+      }
+      .toDF()
   }
 }

@@ -584,11 +584,14 @@ object Graph {
     // Round-18 (the q79 long-sum discipline): the wedge-row sum runs
     // on the contribution's UNSCALED LONG (ra × 10^14, still quantized
     // decimal(18,14) HALF_UP on the |V|-row mid table first — same
-    // values). Per-pair sums are ≤ n_common ≤ maxDeg contributions of
-    // ≤ 10^14 each — far from long overflow but possibly above 2^53,
-    // so the final double goes through an EXACT decimal rescale
-    // (× 1E-14, lossless) and ONE cast — the identical single rounding
-    // the old decimal sum's cast performed.
+    // values). A per-pair sum is n_common contributions of ≤ 5×10^13
+    // each (a mid of a wedge has deg ≥ 2); maxDeg caps each mid's
+    // degree, not n_common, which only min(deg(a), deg(b)) bounds — so
+    // the long sum overflows (an ANSI runtime error) from ~1.8×10^5
+    // common neighbours on. Sums above 2^53 are expected, so the final
+    // double goes through an EXACT decimal rescale (× 1E-14, lossless)
+    // and ONE cast — the identical single rounding the old decimal
+    // sum's cast performed.
     val mid = ed.groupBy(col("src").as("z")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") <= maxDeg)
       .select(col("z"),
@@ -602,7 +605,7 @@ object Graph {
       .join(mid, "z")
     wedges.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_common"),
-        // decimal(23,0): wide enough for the ≤ maxDeg·10^14 sum, and
+        // decimal(23,0): wide enough for any long sum, and
         // 23+14+1 = 38 keeps the × 1E-14 product inside precision 38 —
         // one more digit would trip Spark's precision-loss adjustment
         // and silently round the scale from 14 to 9
@@ -926,9 +929,13 @@ object Graph {
     // UNSCALED LONG of that decimal (score × 10^14) — primitive long
     // adds in the hottest codegen stage instead of per-row Decimal
     // boxing. Bitwise-unchanged scores:
-    //  - a per-key raw-mass sum Σ score_l is bounded by the scaled
-    //    total mass ~10^14 (each c/p receives ≤ the whole normalized
-    //    mass 1), so the long sum can't overflow;
+    //  - a per-key raw-mass sum Σ score_l is bounded by deg × 10^14:
+    //    every half-step after the first reads normalized scores (a
+    //    c/p receives ≤ the whole mass 1, ≤ 10^14 raw), but the first
+    //    reads the unnormalized initial auth 1 per product, so hrl =
+    //    deg(c) × 10^14 — the long sum holds deg(c) < 92,233 distinct
+    //    products (ANSI raises the overflow beyond that), and toDec's
+    //    decimal(23,0) holds any long;
     //  - the raw mass converts back to an EXACT decimal on the
     //    |V|-row aggregate output (× the exact 1E-14 literal — a
     //    lossless rescale, no division), so the normalizing total and
@@ -941,8 +948,10 @@ object Graph {
     // product of an integer-valued decimal and 1E-14 has ≤ 14
     // fractional digits; a (18,14) decimal × 10^14 is integral)
     def toL(c: org.apache.spark.sql.Column) = (c * lit(Scale)).cast("long")
+    // decimal(23,0): 23+14+1 = 38 keeps the × 1E-14 product inside
+    // precision 38, as in linkPrediction
     def toDec(c: org.apache.spark.sql.Column) =
-      (c.cast("decimal(18,0)") * lit(Unscale))
+      (c.cast("decimal(23,0)") * lit(Unscale))
     var auth = eByP.select(col("p")).distinct()
       .withColumn("al", toL(lit(1).cast("decimal(18,14)")))
     var hub: DataFrame = null

@@ -3,132 +3,55 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.SavitzkyGolay
+import graft.SignalRow
+import graft.functions.{SavitzkyGolay, SignalKernel}
 
 /** O3 — Savitzky-Golay smoothing with the reference's block-repeat edge
-  * padding (`/root/reference/peak_detection.py:172-197`, SURVEY §2.3).
+  * padding (the reference's `peak_detection.py:172-197`, SURVEY §2.3),
+  * plus the other per-channel smoothers (EWMA, rolling median) and the
+  * smoothing SNR audit.
   *
-  * Spark-first design: the pad is three narrow projections unioned
-  * (positions never collide), the 51-tap FIR is one window expression
-  * over `(experiment_id, channel) ORDER BY pos` — every downstream
-  * operator shares that partitioning, so Catalyst plans a single
-  * Exchange+Sort for the whole signal pipeline. No UDF, no RDD.
+  * [[withSmooth]] is one typed pass per channel (groupByKey +
+  * flatMapGroups, the shape `PeakDetect.detectPeaks` uses) that calls
+  * [[graft.functions.SignalKernel.smooth]], where the pad, the FIR and
+  * the null rule live.
   */
 object Smoothing {
 
   val keyCols: Seq[String] = Seq("experiment_id", "channel")
   private def keys: Seq[Column] = keyCols.map(col)
 
-  /** FIR dot product in a fixed, engine-portable association order:
-    * taps are split into chunks of ≤[[dotChunk]], each chunk folded
-    * left-assoc from 0.0, chunk sums added left-assoc. The generated
-    * DuckDB oracle SQL parenthesizes identically, so both engines
-    * produce bitwise-identical doubles (DuckDB's expression binder caps
-    * nesting at 128 — a single 301-term chain would not bind).
-    */
-  val dotChunk = 100
-
-  def sgDot(taps: Column, coeffs: Array[Double]): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(
-      graft.functions.FirDotExpr(
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(taps),
-        coeffs, dotChunk))
-
-  /** Block-repeat pad of a per-channel series ordered by `idxCol`
-    * (dense 0-based, per-channel length in `nCol`):
-    * concat(v[0:pad], v, v[m-pad:m]) laid out at positions
-    * [0,pad) ∪ [pad,m+pad) ∪ [m+pad,m+2·pad). NOT mirror, NOT
-    * edge-replicate — duplicated blocks keep original order
-    * (`/root/reference/peak_detection.py:188-189`).
-    *
-    * Built by exploding a per-row array of target positions — a single
-    * narrow Generate, no union: one scan, and the upstream hash
-    * partitioning by channel stays genuinely intact for the downstream
-    * window. (A union of co-partitioned branches is a trap: Spark 4.1
-    * plans the following window without a merging Exchange while the
-    * union concatenates branch partitions — silently wrong frames.)
-    */
-  def blockRepeatPad(df: DataFrame, idxCol: String, nCol: String, pad: Int): DataFrame = {
-    val i = col(idxCol)
-    val n = col(nCol)
-    val none = array().cast("array<bigint>")
-    val positions = concat(
-      when(i < pad, array(i.cast("bigint"))).otherwise(none),
-      array((i + pad).cast("bigint")),
-      when(i >= n - pad, array((i + 2 * pad).cast("bigint"))).otherwise(none)
-    )
-    df.withColumn("_pos", explode(positions))
-  }
-
-  /** `mode='nearest'` edge handling for the SG convolution: extend the
-    * padded series with `k` replicas of its first/last value so every
-    * evaluated position has a full window (scipy pads the input with the
-    * edge value; clamping tap indices ≡ replicating edge rows). Series is
-    * at `_pos` in [0, len); `lenCol` gives per-channel length. Same
-    * explode-not-union construction as [[blockRepeatPad]].
-    */
-  def nearestExtend(padded: DataFrame, lenCol: String, k: Int): DataFrame = {
-    val p = col("_pos")
-    val len = col(lenCol)
-    val none = array().cast("array<bigint>")
-    val positions = concat(
-      when(p === 0, sequence(lit(-k).cast("bigint"), lit(-1).cast("bigint")))
-        .otherwise(none),
-      array(p.cast("bigint")),
-      when(p === len - 1, sequence(len.cast("bigint"), (len + k - 1).cast("bigint")))
-        .otherwise(none)
-    )
-    padded.withColumn("_pos", explode(positions))
-  }
+  /** Output row of [[withSmooth]]: the input sample and its `y_smooth`. */
+  final case class SmoothedRow(
+      experiment_id: String,
+      channel: Int,
+      sample_idx: Long,
+      t: Double,
+      y: Double,
+      y_smooth: Option[Double]
+  )
 
   /** Adds `y_smooth` (SG window/polyorder over block-repeat-padded `y`,
     * pad stripped) to the signal frame. Output length = input length;
     * interior samples equal the plain SG convolution, edge samples see
     * the duplicated block — exact reference parity (SURVEY §2.3).
-    *
-    * For the retained output range the padded-array windows never
-    * overrun (positions k..n+k-1 of an (n+2k)-long series), so scipy's
-    * `mode='nearest'` branch is unreachable here — no edge extension.
     */
   def withSmooth(sig: DataFrame, window: Int = 51, polyorder: Int = 7): DataFrame = {
-    val k = window / 2
+    val spark = sig.sparkSession
+    import spark.implicits._
     val c = SavitzkyGolay.coeffs(window, polyorder)
-    val wch = Window.partitionBy(keys: _*)
-    val wtap = Window.partitionBy(keys: _*).orderBy("_pos").rowsBetween(-k, k)
-
-    val wn = sig.withColumn("_n", count(lit(1)).over(wch))
-    val padded = blockRepeatPad(wn, "sample_idx", "_n", k)
-    padded
-      .withColumn("_taps", collect_list(col("y")).over(wtap))
-      .filter(col("_pos") >= k && col("_pos") < col("_n") + k)
-      .withColumn("y_smooth",
-        when(size(col("_taps")) === window, sgDot(col("_taps"), c)))
-      .drop("_taps", "_pos", "_n")
+    sig.as[SignalRow]
+      .groupByKey(r => (r.experiment_id, r.channel))
+      .flatMapGroups { (_: (String, Int), it: Iterator[SignalRow]) =>
+        val rows = it.toArray.sortBy(_.sample_idx)
+        val s = SignalKernel.smooth(rows.map(_.y), c)
+        rows.iterator.zipWithIndex.map { case (r, i) =>
+          SmoothedRow(r.experiment_id, r.channel, r.sample_idx, r.t, r.y, s.at(i))
+        }
+      }
+      .toDF()
   }
 
-  /** Q171 — rolling-median despeckle: per channel, the median of `y`
-    * over the `±half` sample frame (shrinking at the channel edges —
-    * the first sample's frame is `[0, half]`, the standard
-    * streaming-safe edge rule). The ORDER-STATISTIC counterpart of the
-    * SG smoother: a linear FIR spreads an impulse spike across the
-    * whole window, the median REMOVES it while leaving monotone ramps
-    * bit-identical — which is why despeckle-then-smooth is the classic
-    * front of a peak-detection chain on raw sensor feeds.
-    *
-    * Exactness: the sorted-frame midpoint is picked by index; an
-    * even frame (edge-only here) averages the two middles as ONE
-    * `(a + b) / 2.0` — the oracle computes the identical expression
-    * on DuckDB's `list_sort`, so no quantile-interpolation formula
-    * divergence can enter.
-    *
-    * Scale shape: one channel-keyed exchange (shared with every other
-    * per-channel window in the chain), a BOUNDED ±half frame per row
-    * (O(w) state — never a per-channel sort of the full extent beyond
-    * the one the window ordering already requires), and a narrow
-    * projection out. At 100 TB the frame state is 5 doubles per row in
-    * flight — the despeckle is shuffle-free when the data is already
-    * channel-partitioned.
-    */
   /** Q181 — half-life EWMA: exponentially-weighted moving average with
     * decay λ = 1/2, truncated at `lags` taps and renormalized by the
     * AVAILABLE weight mass (pandas `ewm(adjust=True)` semantics, so the
@@ -158,6 +81,29 @@ object Smoothing {
       (num / den).as("ewma"))
   }
 
+  /** Q171 — rolling-median despeckle: per channel, the median of `y`
+    * over the `±half` sample frame (shrinking at the channel edges —
+    * the first sample's frame is `[0, half]`, the standard
+    * streaming-safe edge rule). The ORDER-STATISTIC counterpart of the
+    * SG smoother: a linear FIR spreads an impulse spike across the
+    * whole window, the median REMOVES it while leaving monotone ramps
+    * bit-identical — which is why despeckle-then-smooth is the classic
+    * front of a peak-detection chain on raw sensor feeds.
+    *
+    * Exactness: the sorted-frame midpoint is picked by index; an
+    * even frame (edge-only here) averages the two middles as ONE
+    * `(a + b) / 2.0` — the oracle computes the identical expression
+    * on DuckDB's `list_sort`, so no quantile-interpolation formula
+    * divergence can enter.
+    *
+    * Scale shape: one channel-keyed exchange (shared with every other
+    * per-channel window in the chain), a BOUNDED ±half frame per row
+    * (O(w) state — never a per-channel sort of the full extent beyond
+    * the one the window ordering already requires), and a narrow
+    * projection out. At 100 TB the frame state is 5 doubles per row in
+    * flight — the despeckle is shuffle-free when the data is already
+    * channel-partitioned.
+    */
   def rollingMedian(sig: DataFrame, half: Int = 2): DataFrame = {
     require(half >= 1, s"rolling median needs a frame (half >= 1), got $half")
     val wfr = Window.partitionBy(keys: _*)

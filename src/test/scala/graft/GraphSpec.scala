@@ -255,6 +255,30 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("hits: a customer with 2x10^4 products does not overflow the first half-step under ANSI") {
+    // the first hub half-step sums the unnormalized initial auth (1 per
+    // product): hub mass deg(c)·10^14 = 2·10^18 raw, past decimal(18,0)
+    val dir = java.nio.file.Files.createTempDirectory("hits").toString
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "true")
+      val parts = 20000
+      Seq((10L, 1L)).toDF("o_orderkey", "o_custkey")
+        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      (1 to parts).map(p => (10L, p.toLong)).toDF("l_orderkey", "l_partkey")
+        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      val out = Graph.hits(spark, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(out.size === parts + 1)
+      assert(out(("hub", 1L)) === 1.0)
+      assert(out.collect { case (("auth", _), v) => v }.forall(_ === 1.0 / parts))
+    } finally {
+      spark.conf.set(key, prev)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("modularity: two disjoint triangles score 0.25 each (total 0.5)") {
     val dir = java.nio.file.Files.createTempDirectory("modul").toString
     try {

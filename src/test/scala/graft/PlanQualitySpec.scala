@@ -27,14 +27,14 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"))
   }
 
-  test("q1: one window pass, native FIR, pad via a single narrow Generate") {
+  test("q1: one channel exchange, one typed per-channel pass, no window or explode") {
     val p = plan("q1_smooth")
-    // two Window nodes (per-channel count, FIR taps) sharing one
-    // channel-hash exchange
-    assert("\\bWindow\\b".r.findAllIn(p).size === 2)
-    assert(p.contains("graft_fir_dot"), "native FIR expression missing")
-    // the block-repeat pad is ONE explode, not a 3-way union
-    assert("Generate explode".r.findAllIn(p).size === 1)
+    // the pad and the 51-tap FIR run inside SignalKernel.smooth, once
+    // per channel, behind the one channel-keyed exchange
+    assert("\\bMapGroups\\b".r.findAllIn(p).size === 1, p)
+    assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, p)
+    assert(!p.contains("Window") && !p.contains("Generate") &&
+      !p.contains("collect_list"), p)
   }
 
   test("q16c: centroid side is broadcast, not shuffled") {
@@ -325,8 +325,7 @@ class PlanQualitySpec extends SparkSpec {
     assert("windowspecdefinition\\(experiment_id#\\d+, channel#\\d+, peak_idx#".r
       .findFirstIn(p6).isDefined, s"gate must be a window:\n$p6")
     assert(!p6.contains("BroadcastNestedLoopJoin"), s"q236 BNLJ:\n$p6")
-    // the offset fan-out rides the (small) beat table (the other
-    // Generate nodes belong to the spine's pad construction)
+    // the offset fan-out rides the (small) beat table
     assert("Generate explode".r.findAllIn(p6).nonEmpty,
       s"offset explode missing:\n$p6")
   }

@@ -66,6 +66,28 @@ class SmoothingSpec extends SparkSpec {
     }
   }
 
+  test("edge lengths 1..526 and a mixed 400/900 frame: nulls and bits as recorded") {
+    val all = EdgeSignals.lengths.flatMap(n => EdgeSignals.noisy(n, ch = n)).toDS().toDF()
+    val out = Smoothing.withSmooth(all)
+    assert(out.columns.toSeq ===
+      Seq("experiment_id", "channel", "sample_idx", "t", "y", "y_smooth"))
+    // below 25 samples the block-repeat pad is the whole series, and
+    // only i in [25-n, 2n-25) has a full 51-tap window
+    assert(EdgeSignals.fingerprint(out, "y_smooth") === Map(
+      1 -> (Nil, 528L),
+      24 -> (List((1, 23)), -7348245868011071079L),
+      25 -> (List((0, 25)), -6932506314581084676L),
+      26 -> (List((0, 26)), 918191768777219714L),
+      51 -> (List((0, 51)), 1761178140593050745L),
+      524 -> (List((0, 524)), -7259006567603902744L),
+      525 -> (List((0, 525)), -4880815756306043782L),
+      526 -> (List((0, 526)), -3742172124587871666L)))
+    val mixed = (EdgeSignals.noisy(400, 0) ++ EdgeSignals.noisy(900, 1)).toDS().toDF()
+    assert(EdgeSignals.fingerprint(Smoothing.withSmooth(mixed), "y_smooth") === Map(
+      0 -> (List((0, 400)), 4506491293949810035L),
+      1 -> (List((0, 900)), -1885497027437263848L)))
+  }
+
   test("ewma: hand-computed adjusted head, constant fixpoint, channel independence") {
     // y = 1, 2, 4 with lambda = 1/2 (adjust=True renormalization):
     //   t0: 1
@@ -142,4 +164,42 @@ class SmoothingSpec extends SparkSpec {
     assert(math.abs(r1.getAs[Double]("noise_var")) < 1e-12)
     assert(r1.isNullAt(r1.fieldIndex("snr_db")))
   }
+}
+
+/** Channels of the lengths where the pad, the 51-tap window and the
+  * 525-sample envelope floor change behaviour, and a fingerprint of an
+  * output column: its non-null runs and a hash of its raw bits. The
+  * expected fingerprints in SmoothingSpec and EnvelopesSpec were
+  * recorded from the earlier window-function implementation of the
+  * two operators.
+  */
+object EdgeSignals {
+  val lengths: Seq[Int] = Seq(1, 24, 25, 26, 51, 524, 525, 526)
+
+  def noisy(n: Int, ch: Int): Seq[SignalRow] = {
+    val rng = new java.util.Random(1000L + n)
+    (0 until n).map { i =>
+      SignalRow("e", ch, i.toLong, i / 100.0,
+        1000.0 + 300.0 * math.sin(i / 20.0) + 8.0 * rng.nextGaussian())
+    }
+  }
+
+  /** Half-open runs of non-null positions. */
+  def runs(vs: Seq[Option[Double]]): List[(Int, Int)] =
+    vs.indices.filter(vs(_).isDefined).foldLeft(List.empty[(Int, Int)]) {
+      case ((a, b) :: t, i) if i == b => (a, i + 1) :: t
+      case (acc, i) => (i, i + 1) :: acc
+    }.reverse
+
+  def bits(vs: Seq[Option[Double]]): Long =
+    vs.foldLeft(17L)((h, v) =>
+      h * 31 + v.fold(1L)(java.lang.Double.doubleToRawLongBits))
+
+  /** channel -> (runs, bits) of column `c`, in sample order. */
+  def fingerprint(df: org.apache.spark.sql.DataFrame, c: String): Map[Int, (List[(Int, Int)], Long)] =
+    df.collect().groupBy(_.getAs[Int]("channel")).map { case (ch, rs) =>
+      val vs = rs.sortBy(_.getAs[Long]("sample_idx")).toSeq
+        .map(r => if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Double](c)))
+      ch -> (runs(vs), bits(vs))
+    }
 }

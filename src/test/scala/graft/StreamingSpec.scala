@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.abs
 import org.apache.spark.sql.streaming.OutputMode
@@ -54,30 +55,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.filter($"channel" === 0).count() === 70L) // 120 - 50 edge
   }
 
-  test("incremental candidates equal batch rule-1 maxima on the interior") {
-    val rng = new java.util.Random(9)
-    val rows = (0 until 400).map(i =>
-      SignalRow("e", 0, i.toLong, i / 100.0,
-        math.sin(i / 7.0) * 5 + rng.nextDouble()))
-    val batch = graft.operators.PeakDetect.candidates(
-        graft.operators.Smoothing.withSmooth(rows.toDS().toDF()))
-      .filter($"sample_idx" >= 26 && $"sample_idx" <= 400 - 27)
-      .select("sample_idx").collect().map(_.getLong(0)).toSet
-
-    val stream = MemoryStream[SignalRow]
-    val q = StreamingOps.incrementalCandidates(stream.toDS())
-      .writeStream.format("memory").queryName("cand_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      stream.addData(rows.take(100)); q.processAllAvailable()
-      stream.addData(rows.drop(100)); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("cand_stream").collect()
-      .map(_.getAs[Long]("sample_idx"))
-      .filter(i => i >= 26 && i <= 400 - 27).toSet
-    assert(got === batch)
-  }
-
   test("incremental envelopes equal batch baseline/ceiling/diastolic on the interior") {
     val rng = new java.util.Random(21)
     val n = 1600
@@ -112,6 +89,47 @@ class StreamingSpec extends SparkSpec {
       .filter { case (k, _) => k >= 325 && k <= n - 350 }
     assert(got.keySet === batch.keySet)
     got.foreach { case (k, v) => assert(v === batch(k), s"at $k") } // bitwise
+  }
+
+  test("incremental smooth and envelopes: trimmed tails stay bitwise equal to batch") {
+    // batches far shorter than the 700-sample envelope cone: the state
+    // tail is trimmed between batches, so the kernel runs over a tail
+    // that no longer starts at the channel's first sample
+    val rng = new java.util.Random(5)
+    val n = 2000
+    val rows = (0 until n).flatMap { i =>
+      val beat = 300.0 * math.exp(-math.pow((i % 230) - 115.0, 2) / 250.0)
+      Seq(0, 1).map(ch => SignalRow("e", ch, i.toLong, i / 100.0,
+        1000.0 + (ch + 1) * beat + rng.nextGaussian() * 8))
+    }
+    def vals(df: DataFrame, c: String) =
+      df.collect().map { r =>
+        (r.getAs[Int]("channel"), r.getAs[Long]("sample_idx")) ->
+          (if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Double](c)))
+      }
+    val batch = graft.operators.Envelopes.withEnvelopes(
+      Smoothing.withSmooth(rows.toDS().toDF()))
+    val splits = Seq(0, 90, 91, 400, 710, 1111, 1300, 1333, 1700, 1999, n)
+    def run(name: String, op: Dataset[SignalRow] => Dataset[_]): DataFrame = {
+      val stream = MemoryStream[SignalRow]
+      val q = op(stream.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try splits.sliding(2).foreach { case Seq(a, b) =>
+        stream.addData(rows.slice(2 * a, 2 * b)); q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name)
+    }
+    val sm = vals(run("smooth_trim", StreamingOps.incrementalSmooth(_)), "y_smooth")
+    val smBatch = vals(batch.filter($"sample_idx".between(25, n - 26)), "y_smooth")
+    assert(sm.length === smBatch.length) // each position emitted once
+    assert(sm.toMap === smBatch.toMap)
+    val env = run("env_trim", StreamingOps.incrementalEnvelopes(_))
+    val envBatch = batch.filter($"sample_idx".between(325, n - 350))
+    Seq("baseline", "ceiling", "diastolic").foreach { c =>
+      val got = vals(env, c)
+      assert(got.length === 2 * (n - 350 - 325 + 1), c)
+      assert(got.toMap === vals(envBatch, c).toMap, c) // bitwise
+    }
   }
 
   test("dedupStream drops cross-micro-batch duplicates via keyed state") {
